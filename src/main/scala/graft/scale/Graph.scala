@@ -175,6 +175,17 @@ object Graph {
       .select(col("dst").as("node"),
         (lit(Base) + expr(s"($DampNum * c) div $DampDen")).as("rank"))
 
+  /** A thread-safe lazy value: whichever stage-pool task needs it first
+    * computes it, the others wait — how [[PageRankIndex]]'s round pipeline
+    * chains its steps without futures.
+    */
+  private final class Cell[A](f: => A) { lazy val get: A = f }
+
+  /** One round's dirty set (one `dst` column), its buckets, and its size
+    * when [[PageRankIndex.collectStats]] is on.
+    */
+  private final case class Cone(dirty: DataFrame, buckets: Array[Integer], size: Long)
+
   /** Per-round dirty-node counts of the last [[PageRankIndex.append]] —
     * the measured footprint the O(cone) law pins (GraphSpec).
     */
@@ -233,38 +244,66 @@ object Graph {
       */
     @volatile var collectStats: Boolean = false
 
-    /** Launch independent table patches on background threads. Each
-      * closure targets its OWN table; the round loop never reads a patched
-      * table back (it carries every patched relation in-plan — versions
-      * are immutable and `read()` pins the version at call time, so
-      * in-flight promotes cannot disturb a running plan). The per-table
-      * collect/stage/promote driver latencies overlap each other AND the
-      * round computations instead of serializing — the fixed cost of a
-      * delta update approaches one patch latency, not 2+iters of them.
-      */
-    private def startPatches(ps: Seq[() => Unit]): Seq[scala.concurrent.Future[Unit]] = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      ps.map(f => Future(f()))
-    }
-
-    private def awaitPatches(fs: Seq[scala.concurrent.Future[Unit]]): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(fs), Duration.Inf)
-    }
-
     /** Materialize independent relations concurrently — sibling
       * localCheckpoints with no data dependency serialize only on the
       * cluster, not on the driver.
       */
-    private def lcPar(dfs: DataFrame*): Seq[DataFrame] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(dfs.map(df => Future(df.localCheckpoint()))),
-        Duration.Inf)
+    private def lcPar(dfs: DataFrame*): Seq[DataFrame] =
+      graft.write.StagedCommit.settleAll(dfs.map(df => () => df.localCheckpoint()))
+
+    /** Cone growth: changed inputs ∪ out-neighbors of the prior round's
+      * dirty set (bucket-pruned scan of the patched out-edges `eoV`).
+      * persist + the buckets collect materializes the set in ONE job.
+      */
+    private def coneStep(eoV: DataFrame, changedInputs: DataFrame, prev: Cone): Cone = {
+      val prop =
+        if (prev.buckets.isEmpty) changedInputs.limit(0)
+        else eoV.filter(col("__b").isin(prev.buckets: _*))
+          .join(prev.dirty.withColumnRenamed("dst", "src"), "src").select("dst")
+      val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
+      Cone(dirtyNow, bucketsOf(dirtyNow, "dst"), if (collectStats) dirtyNow.count() else 0L)
+    }
+
+    /** The delta-update pipeline shared by [[append]] and [[delete]], all on
+      * the stage pool. The edge patches and `rank0Patch` each target their
+      * OWN table and run alongside everything else; the round loop never
+      * reads a patched table back — it carries every patched relation
+      * in-plan, and `read()` pins the version at call time, so in-flight
+      * promotes cannot disturb a running plan. The dirty-cone chain (cheap,
+      * driver-latency-bound) advances round by round; each round's exact
+      * recompute — `recompute(prevCone, cone, prevRanks)`, giving the
+      * round's rows and the rank keys they replace — chains off the
+      * previous round's, and its table patch follows it, so recompute and
+      * patch latencies hide behind the next round's cone discovery. Every
+      * in-plan rank relation is read off its table BEFORE that table's
+      * patch can land (value-identical either way, but one plan). Every
+      * step settles before the first failure is rethrown. Returns the
+      * per-round dirty sizes.
+      */
+    private def patchRounds(edgePatches: Seq[() => Unit], rank0Patch: () => Unit,
+                            eoV: DataFrame, changedInputs: Cell[DataFrame],
+                            cone0: Cell[Cone], ranks0: Cell[DataFrame],
+                            recompute: (Cone, Cone, DataFrame) => (DataFrame, DataFrame),
+                            patch: (VersionedTable, DataFrame, DataFrame) => Unit): Seq[(Int, Long)] = {
+      val cones = (1 to iters).scanLeft(cone0) { (prev, _) =>
+        new Cell(coneStep(eoV, changedInputs.get, prev.get))
+      }
+      var prevRanks = ranks0
+      val rounds = (1 to iters).map { i =>
+        val (pc, c, pr, rank) = (cones(i - 1), cones(i), prevRanks, t(s"rank$i"))
+        val rec = new Cell({
+          val (rows, replaced) = recompute(pc.get, c.get, pr.get)
+          (rows, replaced,
+            rank.read().drop("__b").join(replaced, Seq("node"), "left_anti").unionByName(rows))
+        })
+        prevRanks = new Cell(rec.get._3)
+        () => { val (rows, replaced, _) = rec.get; patch(rank, replaced, rows) }
+      }
+      graft.write.StagedCommit.settleAll(edgePatches ++ Seq(
+        () => { ranks0.get; rank0Patch() },
+        () => { changedInputs.get; cones.foreach(_.get) }) ++ rounds)
+      cones.tail.foreach(_.get.dirty.unpersist(false))
+      if (collectStats) cones.zipWithIndex.map { case (c, i) => i -> c.get.size } else Nil
     }
 
     /** Full build: annotate, bucket, iterate, persisting every round's rank
@@ -354,8 +393,8 @@ object Graph {
       // patch the out-bucketed copy: touched buckets rewritten with updated
       // outdegs + the new rows; every other bucket inherited by reference.
       // The in-bucketed patch below is independent — the two stage+promote
-      // latencies overlap ([[flushPatches]]); the round loop reads both
-      // AFTER the await, so it always sees the patched edge relations.
+      // latencies overlap ([[patchRounds]]), and the round loop carries both
+      // patched relations in-plan.
       val outMerged = eo.read().filter(col("__b").isin(srcBuckets: _*)).drop("__b")
         .join(newDeg.select(col("src"), col("outdeg").as("__nd")), Seq("src"), "left")
         .select(col("src"), col("dst"), coalesce(col("__nd"), col("outdeg")).as("outdeg"))
@@ -369,75 +408,41 @@ object Graph {
         .select(col("src"), col("dst"), coalesce(col("__nd"), col("outdeg")).as("outdeg"))
         .unionByName(newAnnotated)
         .withColumn("__b", bucket(col("dst")))
-      // materialize both merges once, concurrently; background writes and
+      // materialize both merges once, concurrently; the edge patches and
       // the round loop's in-plan views both serve from the materialization
       val Seq(eoM, eiM) = lcPar(outMerged, inMerged)
-      val patchFs = Seq.newBuilder[scala.concurrent.Future[Unit]]
-      patchFs ++= startPatches(Seq(
-        () => eo.promote(eo.stagePatch(
-          eoM.repartition(srcBuckets.length.max(1), col("__b")), Seq("__b"))),
-        () => ei.promote(ei.stagePatch(
-          eiM.repartition(dstBuckets.length.max(1), col("__b")), Seq("__b")))))
-      // patched edge relations carried in-plan for the round loop, so the
-      // loop never waits on (or reads back) the background edge promotes
       val eoV = eo.read().filter(!col("__b").isin(srcBuckets: _*)).unionByName(eoM)
       val eiV = ei.read().filter(!col("__b").isin(dstBuckets: _*)).unionByName(eiM)
       // permanently-changed inputs: dsts of new edges + dsts of re-divided
       // old edges
-      val changedInputs = batch.select("dst").unionByName(oldTouched.select("dst"))
-        .distinct().localCheckpoint()
-      // round 0: brand-new srcs enter at the initial rank. Table patches
-      // are deferred ([[flushPatches]]); the loop's math runs against the
-      // patched relation carried in-plan, which is value-identical.
-      val newSrcs = newDeg.join(oldDeg, Seq("src"), "left_anti")
-        .select(col("src").as("node"), lit(Scale).as("rank")).localCheckpoint()
-      patchFs ++= startPatches(Seq(() => upsertByKey(t("rank0"), newSrcs, "node")))
-      // The dirty-cone chain (cheap, driver-latency-bound) advances on the
-      // main thread; each round's exact recompute + table patch chains off
-      // the previous round's on a future, so recompute latency hides
-      // behind the next round's cone discovery.
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      var prevF: Future[DataFrame] = Future.successful(
-        t("rank0").read().drop("__b")
-          .join(newSrcs.select("node"), Seq("node"), "left_anti")
-          .unionByName(newSrcs))
-      var dirty = newSrcs.select("node")
-      var dirtyB = bucketsOf(dirty, "node")
-      val cached = Seq.newBuilder[DataFrame]
-      val stats = Seq.newBuilder[(Int, Long)]
-      if (collectStats) stats += 0 -> dirty.count()
-      for (i <- 1 to iters) {
-        // cone growth: changed inputs ∪ out-neighbors of the prior round's
-        // dirty set (bucket-pruned out-edge scan). persist + the buckets
-        // collect materializes the set in ONE job.
-        val prop =
-          if (dirtyB.isEmpty) changedInputs.limit(0)
-          else eoV.filter(col("__b").isin(dirtyB: _*))
-            .join(dirty.withColumnRenamed("node", "src"), "src").select("dst")
-        val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
-        cached += dirtyNow
-        val ib = bucketsOf(dirtyNow, "dst")
-        if (collectStats) stats += i -> dirtyNow.count()
-        val round = i
-        // exact recompute of the dirty nodes from the patched (t-1) history:
-        // in-edges bucket-pruned to the dirty dsts
-        val rF = prevF.map { prev =>
-          roundStep(eiV.filter(col("__b").isin(ib: _*)).drop("__b")
-            .join(dirtyNow, Seq("dst")), prev).localCheckpoint()
-        }
-        patchFs += rF.map(rec => upsertByKey(t(s"rank$round"), rec, "node"))
-        prevF = rF.map { rec =>
-          t(s"rank$round").read().drop("__b")
-            .join(rec.select("node"), Seq("node"), "left_anti")
-            .unionByName(rec)
-        }
-        dirty = dirtyNow.withColumnRenamed("dst", "node")
-        dirtyB = ib
-      }
-      awaitPatches(patchFs.result())
-      cached.result().foreach(_.unpersist(false))
-      lastAppendStats = AppendStats(stats.result())
+      val changedInputs = new Cell(batch.select("dst").unionByName(oldTouched.select("dst"))
+        .distinct().localCheckpoint())
+      // round 0: brand-new srcs enter at the initial rank
+      val newSrcs = new Cell(newDeg.join(oldDeg, Seq("src"), "left_anti")
+        .select(col("src").as("node"), lit(Scale).as("rank")).localCheckpoint())
+      val cone0 = new Cell({
+        val d = newSrcs.get.select(col("node").as("dst"))
+        Cone(d, bucketsOf(d, "dst"), if (collectStats) d.count() else 0L)
+      })
+      val ranks0 = new Cell(t("rank0").read().drop("__b")
+        .join(newSrcs.get.select("node"), Seq("node"), "left_anti")
+        .unionByName(newSrcs.get))
+      lastAppendStats = AppendStats(patchRounds(
+        Seq(
+          () => eo.promote(eo.stagePatch(
+            eoM.repartition(srcBuckets.length.max(1), col("__b")), Seq("__b"))),
+          () => ei.promote(ei.stagePatch(
+            eiM.repartition(dstBuckets.length.max(1), col("__b")), Seq("__b")))),
+        () => upsertByKey(t("rank0"), newSrcs.get, "node"),
+        eoV, changedInputs, cone0, ranks0,
+        // exact recompute of the dirty nodes from the patched (t-1)
+        // history: in-edges bucket-pruned to the dirty dsts
+        (_, cone, prev) => {
+          val rec = roundStep(eiV.filter(col("__b").isin(cone.buckets: _*)).drop("__b")
+            .join(cone.dirty, Seq("dst")), prev).localCheckpoint()
+          (rec, rec.select("node"))
+        },
+        (rank, _, rec) => upsertByKey(rank, rec, "node")))
       ranks(iters)
     }
 
@@ -523,76 +528,50 @@ object Graph {
         .join(reDeg, Seq("src"), "left")
         .select(col("src"), col("dst"), coalesce(col("__nd"), col("outdeg")).as("outdeg"))
         .withColumn("__b", bucket(col("dst")))
-      // materialize both merges once, concurrently; the background writes
-      // AND the round loop's in-plan views serve from the materialization,
-      // so the merge join runs once and the durable-write latency overlaps
-      // the rounds
+      // materialize both merges once, concurrently; the edge patches AND
+      // the round loop's in-plan views serve from the materialization, so
+      // the merge join runs once
       val Seq(eoM, eiM) = lcPar(eoMerged, eiMerged)
-      val patchFs = Seq.newBuilder[scala.concurrent.Future[Unit]]
-      patchFs ++= startPatches(Seq(
-        () => eo.promote(eo.stagePatch(
-          eoM.repartition(eoTouch.length, col("__b")), Seq("__b"))),
-        () => ei.promote(ei.stagePatch(
-          eiM.repartition(eiTouch.length.max(1), col("__b")), Seq("__b")))))
       val eoV = eo.read().filter(!col("__b").isin(eoTouch: _*)).unionByName(eoM)
       val eiV = ei.read().filter(!col("__b").isin(eiTouch: _*)).unionByName(eiM)
       // permanently-changed inputs: former dsts of the deleted nodes +
       // remaining dsts of re-divided survivors (deleted nodes themselves
-      // are purged, never recomputed)
-      // round 0: the deleted nodes and the zero-outdeg survivors leave.
-      // changedInputs and r0Gone are independent — materialized together.
-      val Seq(changedInputs, r0Gone) = lcPar(
+      // are purged, never recomputed); round 0: the deleted nodes and the
+      // zero-outdeg survivors leave. Independent — materialized together.
+      val start = new Cell(lcPar(
         notDel("dst")(
           dOut.select("dst").unionByName(oldTouched.select("dst")).distinct()),
-        del.unionByName(zeroSrcs))
-      patchFs ++= startPatches(Seq(() => patchByKey(t("rank0"), r0Gone,
-        del.limit(0).withColumn("rank", lit(Scale)), "node")))
-      // same pipelining as [[append]]: the dirty-cone chain advances on
-      // the main thread; each round's exact recompute + patch chains off
-      // the previous round's on a future.
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      var prevF: Future[DataFrame] = Future.successful(
-        t("rank0").read().drop("__b").join(r0Gone, Seq("node"), "left_anti"))
-      var dirty = changedInputs.limit(0).withColumnRenamed("dst", "node")
-      var dirtyB: Array[Integer] = Array.empty
-      val cached = Seq.newBuilder[DataFrame]
-      val stats = Seq.newBuilder[(Int, Long)]
-      if (collectStats) stats += 0 -> del.count()
-      for (i <- 1 to iters) {
-        val prop =
-          if (dirtyB.isEmpty) changedInputs.limit(0)
-          else eoV.filter(col("__b").isin(dirtyB: _*))
-            .join(dirty.withColumnRenamed("node", "src"), "src").select("dst")
-        val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
-        cached += dirtyNow
-        val ib = bucketsOf(dirtyNow, "dst")
-        if (collectStats) stats += i -> dirtyNow.count()
+        del.unionByName(zeroSrcs)))
+      val changedInputs = new Cell(start.get(0))
+      val r0Gone = new Cell(start.get(1))
+      val cone0 = new Cell(Cone(changedInputs.get.limit(0), Array.empty,
+        if (collectStats) del.count() else 0L))
+      val ranks0 = new Cell(t("rank0").read().drop("__b")
+        .join(r0Gone.get, Seq("node"), "left_anti"))
+      lastDeleteStats = AppendStats(patchRounds(
+        Seq(
+          () => eo.promote(eo.stagePatch(
+            eoM.repartition(eoTouch.length, col("__b")), Seq("__b"))),
+          () => ei.promote(ei.stagePatch(
+            eiM.repartition(eiTouch.length.max(1), col("__b")), Seq("__b")))),
+        () => patchByKey(t("rank0"), r0Gone.get,
+          del.limit(0).withColumn("rank", lit(Scale)), "node"),
+        eoV, changedInputs, cone0, ranks0,
         // dirty nodes whose recompute yields no row (every surviving
         // in-contribution gone) vanish, exactly as a rebuild's roundStep
         // would omit them; deleted nodes are purged unconditionally
-        val rmKeys = dirtyNow.withColumnRenamed("dst", "node").unionByName(del)
-        val round = i
-        val dirtyPrev = dirty
-        val rF = prevF.map { prev =>
-          (if (ib.isEmpty) dirtyPrev.limit(0).withColumn("rank", lit(Scale))
-           else roundStep(
-             eiV.filter(col("__b").isin(ib: _*)).drop("__b")
-               .join(dirtyNow, Seq("dst")),
-             prev)).localCheckpoint()
-        }
-        patchFs += rF.map(rec => patchByKey(t(s"rank$round"), rmKeys, rec, "node"))
-        prevF = rF.map { rec =>
-          t(s"rank$round").read().drop("__b")
-            .join(rmKeys, Seq("node"), "left_anti")
-            .unionByName(rec)
-        }
-        dirty = dirtyNow.withColumnRenamed("dst", "node")
-        dirtyB = ib
-      }
-      awaitPatches(patchFs.result())
-      cached.result().foreach(_.unpersist(false))
-      lastDeleteStats = AppendStats(stats.result())
+        (prevCone, cone, prev) => {
+          val rec =
+            (if (cone.buckets.isEmpty)
+               prevCone.dirty.limit(0).withColumnRenamed("dst", "node")
+                 .withColumn("rank", lit(Scale))
+             else roundStep(
+               eiV.filter(col("__b").isin(cone.buckets: _*)).drop("__b")
+                 .join(cone.dirty, Seq("dst")),
+               prev)).localCheckpoint()
+          (rec, cone.dirty.withColumnRenamed("dst", "node").unionByName(del))
+        },
+        (rank, rmKeys, rec) => patchByKey(rank, rmKeys, rec, "node")))
       ranks(iters)
     }
   }

@@ -33,13 +33,18 @@ object Multimodal {
     * feeds and [[graft.streaming.PhashStream]]'s byte-gated micro-batch
     * form): target = payload bytes / `bytesPerTask`, capped at cores, from
     * driver-side plan stats — shuffle only when the scan provides fewer
-    * splits than that.
+    * splits than that. Unknown stats (a plan without them reports
+    * `spark.sql.defaultSizeInBytes`) mean "do not shuffle": the guard fails
+    * toward the no-op, never toward the small-batch repartition.
     */
   private[graft] def spreadForDecode(df: DataFrame, bytesPerTask: Long): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes
     val target = (bytes / bytesPerTask).min(BigInt(par)).toInt
-    if (target > df.rdd.getNumPartitions) df.repartition(target) else df
+    if (bytes < plan.conf.defaultSizeInBytes && target > df.rdd.getNumPartitions)
+      df.repartition(target)
+    else df
   }
 
   final case class Asset(asset_id: Long, content: Array[Byte], format: String, n_bytes: Long)

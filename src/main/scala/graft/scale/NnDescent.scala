@@ -400,28 +400,15 @@ object NnDescent {
         .select(col("qid").as("u"), col("nid").as("v"), col("score"))
       val gNew = links.join(graph.read().select("u").distinct(),
         Seq("u"), "left_anti").localCheckpoint(false)
-      // stage the codes append CONCURRENTLY with the walk+graph stage (the
-      // SpanGuard overlap pattern): the two stage writes are independent —
-      // only the PROMOTE order (graph first, then codes) carries the crash
-      // argument above, and both promotes stay on this thread, in order.
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val codesStagedF = scala.concurrent.Future {
-        codes.stageAppend(NnDescent.codes(fresh, idCol, vecCol, metaCols))
-      }
-      try {
-        // the count is the walk's ONE action: seeds, rounds and the
-        // anti-join all materialize here through the lazy checkpoint chain
-        if (gNew.count() > 0) graph.promote(graph.stageAppend(gNew))
-      } finally {
-        // always await before propagating: an orphaned stage write racing a
-        // retry into the same version directory is the ADVICE r20 hazard
-        scala.concurrent.Await.ready(codesStagedF,
-          scala.concurrent.duration.Duration.Inf)
-        ()
-      }
-      codes.promote(scala.concurrent.Await.result(codesStagedF,
-        scala.concurrent.duration.Duration.Inf))
+      // the codes append stages CONCURRENTLY with the walk+graph stage;
+      // graph promotes first (the crash argument above). The count is the
+      // walk's ONE action: seeds, rounds and the anti-join all materialize
+      // there through the lazy checkpoint chain; with no new links the
+      // graph "stage" is its committed version and the promote a no-op.
+      graft.write.StagedCommit(None,
+        graph -> (() =>
+          if (gNew.count() > 0) graph.stageAppend(gNew) else graph.currentVersion.get),
+        codes -> (() => codes.stageAppend(NnDescent.codes(fresh, idCol, vecCol, metaCols))))
       graph.compactIfNeeded(maxChainDepth)
       codes.compactIfNeeded(maxChainDepth)
     }
@@ -435,24 +422,18 @@ object NnDescent {
     def compact(): Unit = {
       val dead = ts.dead()
       val cz = policy.checkpoint(ts.minus(codes.read()))
-      // stage the codes write CONCURRENTLY with the graph rebuild — both
-      // read only the checkpointed cz; promote order (codes, then graph)
-      // is unchanged and stays on this thread
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val codesStagedF = scala.concurrent.Future { codes.stage(cz) }
-      val e = try {
+      // the codes stage overlaps the graph rebuild — both read only the
+      // checkpointed cz; the graph stages after the codes promote, as it
+      // always has (so not a StagedCommit)
+      lazy val codesStaged = codes.stage(cz)
+      lazy val e = {
         var g = cut(initGraph(cz.select("nid"), graphK, buckets), policy)
         for (_ <- 1 to iters)
           g = cut(descentRound(g, cz, graphK, policy), policy)
         g
-      } finally {
-        scala.concurrent.Await.ready(codesStagedF,
-          scala.concurrent.duration.Duration.Inf)
-        ()
       }
-      codes.promote(scala.concurrent.Await.result(codesStagedF,
-        scala.concurrent.duration.Duration.Inf))
+      graft.write.StagedCommit.settleAll(Seq(() => codesStaged, () => e))
+      codes.promote(codesStaged)
       graph.promote(graph.stage(e))
       if (dead.nonEmpty) ts.truncate()
     }

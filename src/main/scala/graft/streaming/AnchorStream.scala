@@ -46,11 +46,10 @@ final class AnchorCountIndex(spark: SparkSession, root: String,
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    if (counts.exists && counts.currentTag.contains(tag)) return
+    if (counts.hasTag(tag)) return
     val partial = build(inputFilter(batch))
       .sortWithinPartitions(keyCols.head)
-    if (counts.exists) counts.promote(counts.stageAppend(partial), Some(tag))
-    else counts.promote(counts.stage(partial), Some(tag))
+    counts.promote(counts.stageAppendOrNew(partial), Some(tag))
     if (counts.chainDepth > maxChainDepth) compact()
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.write.VersionedTable
+import graft.write.{StagedCommit, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,9 +66,7 @@ final class BudgetAdmitIndex(
                    nTokensCol: String = "n_tokens", seqCol: String = "day"): Unit = {
     import spark.implicits._
     val tag = s"batch=$batchId"
-    val admittedDone = admitted.exists && admitted.currentTag.contains(tag)
-    val stateDone = state.exists && state.currentTag.contains(tag)
-    if (admittedDone && stateDone) return
+    if (admitted.hasTag(tag) && state.hasTag(tag)) return
     val b = broadcast(budgets.toDF("stratum", "__budget"))
     // lazy checkpoints + ONE fused probe (r21): batch seq span and the
     // state watermark land in a single cross-joined aggregate job that
@@ -103,38 +101,22 @@ final class BudgetAdmitIndex(
       .filter(col("consumed") + col("__before") < col("__budget"))
       .select(col("id"), col("stratum"), col("n_tokens"), col("seq"))
       .localCheckpoint(false)
-    // overlapped stage writes, ordered promotes (admitted first — its tag
-    // is the replay gate); the future settles before any promote or
-    // rethrow (ADVICE r20). The two stages can race adm's lazy
-    // materialization and each compute the per-stratum window — accepted:
-    // it is one window over ONE micro-batch on otherwise-idle cores,
-    // cheaper than the extra serialized checkpoint job that would pin it.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val admStagedF =
-      if (admittedDone) None
-      else Some(scala.concurrent.Future {
-        if (admitted.exists) admitted.stageAppend(adm) else admitted.stage(adm)
-      })
-    val stateStaged = try {
-      val newState = st
-        .join(adm.groupBy("stratum").agg(sum("n_tokens").as("__add")),
-          Seq("stratum"), "left")
-        .select(col("stratum"),
-          (col("consumed") + coalesce(col("__add"), lit(0L))).as("consumed"),
-          greatest(col("max_seq"), lit(batchMax)).as("max_seq"))
-      state.stage(newState)
-    } finally {
-      admStagedF.foreach(f => scala.concurrent.Await.ready(f,
-        scala.concurrent.duration.Duration.Inf))
-    }
-    admStagedF.foreach { f =>
-      admitted.promote(scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf), Some(tag))
-      admitted.compactIfNeeded(maxChainDepth)
-      ()
-    }
-    state.promote(stateStaged, Some(tag))
+    // pinned before the concurrent stages: the admitted append and the
+    // consumed-token fold must read ONE evaluation of the admission window,
+    // or a recompute (fetch-failure retry, id ties) could admit one row set
+    // and fold another
+    adm.count()
+    val newState = st
+      .join(adm.groupBy("stratum").agg(sum("n_tokens").as("__add")),
+        Seq("stratum"), "left")
+      .select(col("stratum"),
+        (col("consumed") + coalesce(col("__add"), lit(0L))).as("consumed"),
+        greatest(col("max_seq"), lit(batchMax)).as("max_seq"))
+    // admitted first: its tag is the replay gate
+    StagedCommit(Some(tag),
+      admitted -> (() => admitted.stageAppendOrNew(adm)),
+      state -> (() => state.stage(newState)))
+    admitted.compactIfNeeded(maxChainDepth)
     ()
   }
 }

@@ -135,8 +135,8 @@ final class NearDupIndex(spark: SparkSession, root: String,
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    val survivorsDone = survivors.exists && survivors.currentTag.contains(tag)
-    val signaturesDone = signatures.exists && signatures.currentTag.contains(tag)
+    val survivorsDone = survivors.hasTag(tag)
+    val signaturesDone = signatures.hasTag(tag)
     if (survivorsDone && signaturesDone) return
     // tombstoned ids are rejected while their tombstone lives (see [[delete]])
     // lazy checkpoints (r21): the survivors stage write is the batch's ONE
@@ -159,12 +159,10 @@ final class NearDupIndex(spark: SparkSession, root: String,
     // 3. grow both tables with the accepted rows
     val keptSigs = sigs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
     if (!survivorsDone) {
-      if (survivors.exists) survivors.promote(survivors.stageAppend(kept), Some(tag))
-      else survivors.promote(survivors.stage(kept), Some(tag))
+      survivors.promote(survivors.stageAppendOrNew(kept), Some(tag))
     }
     if (!signaturesDone) {
-      if (signatures.exists) signatures.promote(signatures.stageAppend(keptSigs), Some(tag))
-      else signatures.promote(signatures.stage(keptSigs), Some(tag))
+      signatures.promote(signatures.stageAppendOrNew(keptSigs), Some(tag))
     }
     // bound the append chains a continuous crawl accumulates: read cost
     // stays O(maxChainDepth) union legs, the O(table) rewrite amortizes to

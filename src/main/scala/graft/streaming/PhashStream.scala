@@ -95,7 +95,7 @@ final class PhashIndex(spark: SparkSession, root: String,
   /** Drain one image batch: (asset_id, payload binary, fmt ∈ png|gif|jpeg). */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    if (hashes.exists && hashes.currentTag.contains(tag)) return
+    if (hashes.hasTag(tag)) return
     val ss = batch.sparkSession
     import ss.implicits._
     // spread the decode (the batch's CPU cost) across cores ONLY when the
@@ -141,8 +141,7 @@ final class PhashIndex(spark: SparkSession, root: String,
            Seq("asset_id"), "left_anti")
        })
         .localCheckpoint(false) // materialized by the stage write (r21)
-    if (hashes.exists) hashes.promote(hashes.stageAppend(kept), Some(tag))
-    else hashes.promote(hashes.stage(kept), Some(tag))
+    hashes.promote(hashes.stageAppendOrNew(kept), Some(tag))
     // bound the append chain; a rewrite that's being paid anyway also
     // clears pending tombstones (the NearDupIndex policy)
     if (hashes.chainDepth > maxChainDepth) compactPurge()
@@ -268,7 +267,7 @@ final class VideoPhashIndex(spark: SparkSession, root: String,
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    if (frames.exists && frames.currentTag.contains(tag)) return
+    if (frames.hasTag(tag)) return
     val ss = batch.sparkSession
     import ss.implicits._
     // byte-gated decode spread (see [[PhashIndex.processBatch]] — video
@@ -322,8 +321,7 @@ final class VideoPhashIndex(spark: SparkSession, root: String,
            Seq("asset_id"), "left_anti")
        })
         .localCheckpoint(false) // materialized by the stage write (r21)
-    if (frames.exists) frames.promote(frames.stageAppend(kept), Some(tag))
-    else frames.promote(frames.stage(kept), Some(tag))
+    frames.promote(frames.stageAppendOrNew(kept), Some(tag))
     if (frames.chainDepth > maxChainDepth) compactPurge()
     ()
   }

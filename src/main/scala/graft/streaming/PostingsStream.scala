@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.scale.Retrieval
-import graft.write.VersionedTable
+import graft.write.{StagedCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -101,18 +101,14 @@ final class PostingsIndex(spark: SparkSession, root: String,
       coalesce(sum("len"), lit(0L)).as("sum_len"))
 
   /** Index one micro-batch of (doc_id, text). Callable directly so specs
-    * drive controlled batch boundaries. Three tagged promotes (postings,
-    * lengths partial, stats partial), each guarded separately, so a
-    * redelivery after a crash between them completes exactly-once.
+    * drive controlled batch boundaries. One tagged [[StagedCommit]] of
+    * postings, lengths partial and stats partial, so a redelivery after a
+    * crash between the promotes completes exactly-once.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    val postingsDone = postings.exists && postings.currentTag.contains(tag)
-    val lengthsDone = !maintainSidecars ||
-      (lengths.exists && lengths.currentTag.contains(tag))
-    val statsDone = !maintainSidecars ||
-      (stats.exists && stats.currentTag.contains(tag))
-    if (postingsDone && lengthsDone && statsDone) return
+    val tables = if (maintainSidecars) Seq(postings, lengths, stats) else Seq(postings)
+    if (tables.forall(_.hasTag(tag))) return
     val incoming = batch.select(col("doc_id"), col("text"))
       .filter(col("text").isNotNull)
     // a tombstoned id stays deleted while its tombstone lives: admitting it
@@ -126,30 +122,8 @@ final class PostingsIndex(spark: SparkSession, root: String,
     val live = ts.minus(incoming).localCheckpoint(false)
     val p = build(live).sortWithinPartitions("term")
     val lp = lenPartial(live).localCheckpoint(false)
-    // the three stage WRITES are independent (three separate tables) and
-    // overlap via futures — the SpanGuard pattern; the tagged PROMOTES stay
-    // on this thread in the original order (postings, lengths, stats),
-    // which is the order the redelivery protocol's crash argument uses.
-    // Every future is awaited before any promote and before rethrowing (a
-    // failed/orphaned stage racing a retry into the same version directory
-    // is the ADVICE r20 hazard).
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    def staged(t: VersionedTable, df: DataFrame) =
-      scala.concurrent.Future { if (t.exists) t.stageAppend(df) else t.stage(df) }
-    val pF = if (!postingsDone) Some(staged(postings, p)) else None
-    val lF = if (maintainSidecars && !lengthsDone) Some(staged(lengths, lp)) else None
-    val sF = if (maintainSidecars && !statsDone) Some(staged(stats, statsPartial(lp))) else None
-    val all = Seq(pF, lF, sF).flatten
-    val results = all.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    results.foreach(_.get) // first stage failure rethrows AFTER all settled
-    pF.foreach(f => postings.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    lF.foreach(f => lengths.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    sF.foreach(f => stats.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
+    StagedCommit(Some(tag), tables.zip(Seq(p, lp, statsPartial(lp))).map {
+      case (t, df) => t -> (() => t.stageAppendOrNew(df)) }: _*)
     // chain-depth policy: bounded read cost for a continuous drain
     // (amortized rewrite — see VersionedTable.compactIfNeeded); routed
     // through the purge-aware compaction so pending tombstones clear too
@@ -293,10 +267,8 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
 
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    val postingsDone = postings.exists && postings.currentTag.contains(tag)
-    val lengthsDone = lengths.exists && lengths.currentTag.contains(tag)
-    val statsDone = stats.exists && stats.currentTag.contains(tag)
-    if (postingsDone && lengthsDone && statsDone) return
+    val tables = Seq(postings, lengths, stats)
+    if (tables.forall(_.hasTag(tag))) return
     // reject-while-tombstoned (the PostingsIndex append-growth asymmetry);
     // lazy checkpoints, materialized ONCE by the count below BEFORE the
     // concurrent stage writes launch — three racing stages would otherwise
@@ -307,27 +279,9 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
       .localCheckpoint(false)
     val lp = lenPartial(live).localCheckpoint(false)
     lp.count()
-    // overlapped stage writes + ordered promotes: PostingsIndex.processBatch's
-    // protocol, verbatim (see its comment for the await/crash argument)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    def staged(t: VersionedTable, df: DataFrame) =
-      scala.concurrent.Future { if (t.exists) t.stageAppend(df) else t.stage(df) }
-    val pF = if (!postingsDone) Some(staged(postings,
-      Retrieval.fieldedInvertedIndex(live, fields).sortWithinPartitions("term")))
-    else None
-    val lF = if (!lengthsDone) Some(staged(lengths, lp)) else None
-    val sF = if (!statsDone) Some(staged(stats, statsPartial(lp))) else None
-    val all = Seq(pF, lF, sF).flatten
-    val results = all.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    results.foreach(_.get)
-    pF.foreach(f => postings.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    lF.foreach(f => lengths.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    sF.foreach(f => stats.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
+    val p = Retrieval.fieldedInvertedIndex(live, fields).sortWithinPartitions("term")
+    StagedCommit(Some(tag), tables.zip(Seq(p, lp, statsPartial(lp))).map {
+      case (t, df) => t -> (() => t.stageAppendOrNew(df)) }: _*)
     if (postings.chainDepth > maxChainDepth) compact()
   }
 

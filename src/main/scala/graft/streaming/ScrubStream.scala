@@ -36,11 +36,10 @@ final class ScrubIndex(spark: SparkSession, root: String, n: Int = 8,
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     require(grams.exists, s"ScrubIndex at $root must be seeded before draining")
     val tag = s"batch=$batchId"
-    if (clean.exists && clean.currentTag.contains(tag)) return
+    if (clean.hasTag(tag)) return
     val scrubbed = Curation.scrubAgainstGrams(
       batch.filter(col("text").isNotNull), grams.read(), n)
-    if (clean.exists) clean.promote(clean.stageAppend(scrubbed), Some(tag))
-    else clean.promote(clean.stage(scrubbed), Some(tag))
+    clean.promote(clean.stageAppendOrNew(scrubbed), Some(tag))
     if (clean.chainDepth > maxChainDepth) { clean.compact(); () }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.write.VersionedTable
+import graft.write.{StagedCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -59,70 +59,36 @@ final class SpanGuardIndex(spark: SparkSession, root: String,
   /** Ingest one micro-batch of (doc_id, text). */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    // replay gate: the spans promote carries the stamp in growing mode;
     // in frozen (screen-only) mode the spans table never moves, so the
-    // admitted log carries it instead
-    val done =
-      if (growSpans) spans.exists && spans.currentTag.contains(tag)
-      else admitted.exists && admitted.currentTag.contains(tag)
-    if (done) return
-    val sc = spark.sparkContext
-    sc.setJobDescription(s"spanguard $tag: batch spans")
+    // admitted log alone carries the stamp
+    val tables = if (growSpans) Seq(admitted, spans) else Seq(admitted)
+    if (tables.forall(_.hasTag(tag))) return
     val ds = docSpans(batch).localCheckpoint()
     val rejected =
       if (spans.exists) ds.join(spans.read(), Seq("h"), "left_semi")
         .select("doc_id").distinct()
       else ds.select("doc_id").limit(0)
-    // anti-join vs the stored log: a crash between the two promotes
-    // (admitted landed, spans didn't) replays the batch, and the append
-    // must not duplicate the already-admitted ids
+    // anti-join vs the stored log: a re-crawled id already admitted must
+    // not be appended twice
     val adm0 = batch.select("doc_id").distinct()
       .join(rejected, Seq("doc_id"), "left_anti")
     val adm = if (admitted.exists)
       adm0.join(admitted.read(), Seq("doc_id"), "left_anti") else adm0
-    val admTag = if (growSpans) None else Some(tag)
-    // the two staging writes are independent of each other (both read only
-    // the checkpointed batch spans and the PRE-promote table states), so
-    // they run concurrently and back-fill each other's task tails; the
-    // PROMOTES stay strictly ordered (admitted, then spans) — the crash
-    // story below depends on that order, not on the stage order
-    val admStagedF = scala.concurrent.Future {
-      // the job description is a THREAD-LOCAL: set and clear it inside this
-      // pooled thread, or it leaks onto unrelated later jobs (ADVICE r20)
-      sc.setJobDescription(s"spanguard $tag: admitted append")
-      try { if (admitted.exists) admitted.stageAppend(adm) else admitted.stage(adm) }
-      finally sc.setJobDescription(null)
-    }(scala.concurrent.ExecutionContext.global)
-    val spansStaged = try {
-      if (!growSpans) None
-      else {
+    // both stages read only the checkpointed batch spans and the
+    // PRE-promote table states
+    StagedCommit(Some(tag), tables.zip(Seq[() => Int](
+      () => admitted.stageAppendOrNew(adm),
+      () => {
         // ALL batch spans enter the index (the re-crawl rule): admission
         // never depends on earlier admissions, only on earlier batches
         val fresh =
           if (spans.exists) ds.select("h").distinct()
             .join(spans.read(), Seq("h"), "left_anti")
           else ds.select("h").distinct()
-        sc.setJobDescription(s"spanguard $tag: spans append")
-        Some(if (spans.exists) spans.stageAppend(fresh) else spans.stage(fresh))
-      }
-    } finally {
-      // settle the staging future even when the spans path throws — an
-      // orphaned stage write racing a retried batch is the ADVICE r20 hazard
-      scala.concurrent.Await.ready(admStagedF,
-        scala.concurrent.duration.Duration.Inf)
-      ()
-    }
-    val admStaged = scala.concurrent.Await.result(
-      admStagedF, scala.concurrent.duration.Duration.Inf)
-    admitted.promote(admStaged, admTag)
-    spansStaged.foreach { v =>
-      spans.promote(v, Some(tag))
-      sc.setJobDescription(s"spanguard $tag: spans compact")
-      if (spans.chainDepth > maxChainDepth) { spans.compact(); () }
-    }
-    sc.setJobDescription(s"spanguard $tag: admitted compact")
+        spans.stageAppendOrNew(fresh)
+      })): _*)
+    if (growSpans && spans.chainDepth > maxChainDepth) { spans.compact(); () }
     if (admitted.chainDepth > maxChainDepth) { admitted.compact(); () }
-    sc.setJobDescription(null)
   }
 }
 

@@ -38,8 +38,8 @@ final class TriangleStream(
     */
   def processBatch(batch0: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    val statsDone = stats.exists && stats.currentTag.contains(tag)
-    val edgesDone = edges.exists && edges.currentTag.contains(tag)
+    val statsDone = stats.hasTag(tag)
+    val edgesDone = edges.hasTag(tag)
     if (statsDone && edgesDone) return
     // lazy checkpoints (r21): batch and newEdges materialize inside the
     // first consuming stage write and are reused by the second — per-batch
@@ -74,7 +74,7 @@ final class TriangleStream(
       }
     val edgesStaged =
       if (edgesDone) None
-      else Some(if (edges.exists) edges.stageAppend(newEdges) else edges.stage(newEdges))
+      else Some(edges.stageAppendOrNew(newEdges))
     statsStaged.foreach(v => stats.promote(v, Some(tag)))
     edgesStaged.foreach(v => edges.promote(v, Some(tag)))
     edges.compactIfNeeded(maxChainDepth)

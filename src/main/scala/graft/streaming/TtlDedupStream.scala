@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.write.VersionedTable
+import graft.write.{StagedCommit, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,9 +63,7 @@ final class TtlDedupIndex(
                    idCol: String = "doc_id", keyCol: String = "key",
                    dayCol: String = "day"): Unit = {
     val tag = s"batch=$batchId"
-    val admittedDone = admitted.exists && admitted.currentTag.contains(tag)
-    val stateDone = state.exists && state.currentTag.contains(tag)
-    if (admittedDone && stateDone) return
+    if (admitted.hasTag(tag) && state.hasTag(tag)) return
     // lazy checkpoints + ONE fused probe (r21): batch size, batch min day
     // and the state watermark land in a single 1×1 cross-joined aggregate
     // job that also materializes both checkpoints — replacing the eager
@@ -87,43 +85,33 @@ final class TtlDedupIndex(
       s"TtlDedupIndex: batch $batchId min day $batchMin precedes the " +
         s"state watermark $wmPrev — the feed must be day-ordered")
     // the admitted STAGE overlaps the state fold (independent tables; both
-    // read only the checkpointed batch/state) — promotes stay on this
-    // thread; the scaladoc's crash argument holds on either promote order,
-    // and the future settles before any promote or rethrow (ADVICE r20)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val admStagedF =
-      if (admittedDone) None
-      else Some(scala.concurrent.Future {
-        val prevInBatch = lag("day", 1)
-          .over(Window.partitionBy("key").orderBy("day", "id"))
-        val adm = batch
-          .withColumn("__prev_b", prevInBatch)
-          .join(st.withColumnRenamed("last_seen", "__prev_s"), Seq("key"), "left")
-          .withColumn("__prev", coalesce(col("__prev_b"), col("__prev_s")))
-          .filter(col("__prev").isNull || col("day") - col("__prev") > ttlDays)
-          .select(col("id"), col("key"), col("day"))
-        if (admitted.exists) admitted.stageAppend(adm) else admitted.stage(adm)
-      })
-    val (wm, merged) = try {
-      // idempotent fold: max-merge last sightings, evict past the watermark
-      val m = st
-        .unionByName(batch.groupBy("key").agg(max("day").as("last_seen")))
-        .groupBy("key").agg(max("last_seen").as("last_seen"))
-        .localCheckpoint(false)
-      (m.agg(max("last_seen")).head().getLong(0), m)
-    } finally {
-      admStagedF.foreach(f => scala.concurrent.Await.ready(f,
-        scala.concurrent.duration.Duration.Inf))
+    // read only the checkpointed batch/state). Hand-ordered rather than a
+    // StagedCommit: the state stage needs the fold's watermark and runs
+    // after the admitted promote, as it always has; the scaladoc's crash
+    // argument holds on either promote order.
+    lazy val admStaged = if (admitted.hasTag(tag)) None else {
+      val prevInBatch = lag("day", 1)
+        .over(Window.partitionBy("key").orderBy("day", "id"))
+      val adm = batch
+        .withColumn("__prev_b", prevInBatch)
+        .join(st.withColumnRenamed("last_seen", "__prev_s"), Seq("key"), "left")
+        .withColumn("__prev", coalesce(col("__prev_b"), col("__prev_s")))
+        .filter(col("__prev").isNull || col("day") - col("__prev") > ttlDays)
+        .select(col("id"), col("key"), col("day"))
+      Some(admitted.stageAppendOrNew(adm))
     }
-    admStagedF.foreach { f =>
-      admitted.promote(scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf), Some(tag))
+    // idempotent fold: max-merge last sightings, evict past the watermark
+    lazy val merged = st
+      .unionByName(batch.groupBy("key").agg(max("day").as("last_seen")))
+      .groupBy("key").agg(max("last_seen").as("last_seen"))
+      .localCheckpoint(false)
+    lazy val wm = merged.agg(max("last_seen")).head().getLong(0)
+    StagedCommit.settleAll(Seq(() => admStaged, () => wm))
+    admStaged.foreach { v =>
+      admitted.promote(v, Some(tag))
       admitted.compactIfNeeded(maxChainDepth)
-      ()
     }
     val live = merged.filter(lit(wm) - col("last_seen") <= ttlDays)
     state.promote(state.stage(live), Some(tag))
-    ()
   }
 }

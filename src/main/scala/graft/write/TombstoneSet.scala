@@ -49,15 +49,17 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
   def exists: Boolean = table.exists
 
   // (manifest version it was read at) → the checkpointed dead relation and
-  // its row count (None = the set is empty at that version)
-  private var deadMemo: Option[(Int, Option[(DataFrame, Long)])] = None
+  // its row count (None = the set is empty at that version); atomic because
+  // purge stages read it from StagedCommit's pool threads
+  private val deadMemo =
+    new java.util.concurrent.atomic.AtomicReference[(Int, Option[(DataFrame, Long)])]()
 
   private def deadWithCount(): Option[(DataFrame, Long)] =
     table.currentVersion match {
       case None => None
       case Some(ver) =>
-        deadMemo match {
-          case Some((mv, cached)) if mv == ver => cached
+        deadMemo.get() match {
+          case (mv, cached) if mv == ver => cached
           case _ =>
             // lazy checkpoint + count: ONE job materializes the blocks AND
             // answers emptiness (the eager-checkpoint-then-isEmpty form
@@ -65,7 +67,7 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
             val d = table.read().localCheckpoint(false)
             val n = d.count()
             val res = if (n == 0) None else Some((d, n))
-            deadMemo = Some((ver, res))
+            deadMemo.set((ver, res))
             res
         }
     }
@@ -74,7 +76,7 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
     * by the mutators whose promote content is already checkpointed.
     */
   private def primeMemo(content: Option[(DataFrame, Long)]): Unit =
-    table.currentVersion.foreach(v => deadMemo = Some((v, content)))
+    table.currentVersion.foreach(v => deadMemo.set((v, content)))
 
   /** O(batch) dedup append of deleted ids; `srcCol` (any numeric/castable
     * column) is normalized to a long `idCol`.
@@ -136,32 +138,15 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
   /** [[purge]] with a per-table reshape hook on the purged relation. The
     * per-primary purge REWRITES are independent of each other (each reads
     * its own table's pre-promote state plus the checkpointed dead set), so
-    * they stage concurrently and back-fill each other's task tails (guide
-    * §2.6); the PROMOTES stay strictly ordered — primaries first, in
-    * argument order, then the tombstone truncate — which is the order the
-    * crash-convergence argument depends on.
+    * they stage concurrently in one untagged [[StagedCommit]]; the
+    * tombstone truncate follows the last primary promote.
     */
   def purgeInto(primaries: (VersionedTable, DataFrame => DataFrame)*): Unit =
     dead() match {
       case Some(d) =>
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val staged = primaries.map { case (t, reshape) =>
-          scala.concurrent.Future {
-            t.stage(reshape(t.read().join(d, Seq(idCol), "left_anti")))
-          }
-        }
-        // await EVERY stage before the first promote (a failed stage must
-        // not leave a prefix of the primaries promoted with the rest stale)
-        // and before rethrowing (an orphaned future could otherwise race a
-        // retry's stage into the same version directory — the ADVICE r20
-        // hazard)
-        val results = staged.map(f => scala.util.Try(
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-        val versions = results.map(_.get)
-        primaries.zip(versions).foreach { case ((t, _), v) =>
-          t.promote(v, t.currentTag)
-        }
+        StagedCommit(None, primaries.map { case (t, reshape) =>
+          t -> (() => t.stage(reshape(t.read().join(d, Seq(idCol), "left_anti"))))
+        }: _*)
         table.promote(table.stage(d.limit(0)))
         primeMemo(None)
       case None =>

@@ -201,6 +201,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
     else new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
       .linesIterator.drop(1).find(_.nonEmpty).map(_.trim)
 
+  /** Whether the last promote was stamped with `tag` — the replay gate of
+    * every batch-stamped sink ([[StagedCommit]] skips such members).
+    */
+  def hasTag(tag: String): Boolean = currentTag.contains(tag)
+
   def exists: Boolean = currentVersion.isDefined
 
   def read(): DataFrame = {
@@ -560,6 +565,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
       all.map { case (v, d) => s"$v\t$d" }.mkString("\n").getBytes(StandardCharsets.UTF_8))
     next
   }
+
+  /** [[stageAppend]] onto a committed table, else stage its first version
+    * — the growth step of every append-only sink.
+    */
+  def stageAppendOrNew(df: DataFrame): Int =
+    if (exists) stageAppend(df) else stage(df)
 
   /** W1/W2 full refresh: stage + promote. */
   def fullRefresh(df: DataFrame): Unit = promote(stage(df))

@@ -16,6 +16,19 @@ class MultimodalSpec extends SparkSpec {
     assert(Set("png", "jpeg", "webp").contains(row.format))
   }
 
+  test("spreadForDecode: unknown plan stats mean no shuffle") {
+    // an RDD-backed relation has no size estimate: its plan reports
+    // spark.sql.defaultSizeInBytes, which must not read as "huge payload"
+    val rows = spark.sparkContext.parallelize(
+      Seq(org.apache.spark.sql.Row(1L, Array[Byte](1, 2, 3))), numSlices = 1)
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("asset_id", "long").add("content", "binary")
+    val df = spark.createDataFrame(rows, schema)
+    val spread = Multimodal.spreadForDecode(df, 1L)
+    assert(!spread.queryExecution.executedPlan.toString.contains("Exchange"))
+    assert(spread.rdd.getNumPartitions === 1)
+  }
+
   test("decodeStub is deterministic and partition-parallel") {
     val a = Multimodal.assets(docs)
     val f1 = Multimodal.decodeStub(a).collect().sortBy(_.asset_id)
