@@ -20,9 +20,6 @@ object Cleaning {
   def stripDollarComma(c: Column): Column =
     regexp_replace(c, "[$,]", "").cast("double")
 
-  /** Epoch seconds -> date string (Weather_to_Redshift.py:38). */
-  def epochToDate(c: Column): Column = to_date(timestamp_seconds(c))
-
   val queries: Seq[Q] = Seq(
     // Round-trip the cleaning functions over synthesized dirty strings so the
     // oracle can verify them ('%'-suffixed and '$'-prefixed ints).

@@ -90,9 +90,9 @@ object Scale {
       import org.apache.spark.unsafe.types.UTF8String
       // max-heap on (h, v); keep the k smallest per group, compared in the
       // SAME order phase 2's window uses — Spark strings sort by UTF-8
-      // binary compare (UTF8String), which disagrees with Java's UTF-16
-      // compareTo between U+E000–U+FFFF and the supplementary planes
-      implicit val utf8Ord: Ordering[UTF8String] = (a, b) => a.compareTo(b)
+      // binary compare (UTF8String's own Comparable order, which the heap
+      // uses), which disagrees with Java's UTF-16 compareTo between
+      // U+E000–U+FFFF and the supplementary planes
       val heaps = scala.collection.mutable.Map
         .empty[String, scala.collection.mutable.PriorityQueue[(UTF8String, Double)]]
       it.foreach { case (g, h, v) =>

@@ -275,8 +275,7 @@ object PipelineQueries {
       table.promote(table.stage(base, Seq("p")))
       Seq(1 -> 100, 2 -> 200, 3 -> 300).foreach { case (part, delta) =>
         table.promote(table.stagePatch(
-          base.filter(col("p") === part).withColumn("m", col("m") + delta),
-          Seq("p")))
+          base.filter(col("p") === part).withColumn("m", col("m") + delta)))
       }
       table.vacuum(keep = 2)
       table.readVersion(2).withColumn("version", lit(2))

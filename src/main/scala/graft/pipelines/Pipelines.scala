@@ -40,11 +40,6 @@ object Pipelines {
 
   // ---- StockInfo (W1/W3, S3) ----------------------------------------------
 
-  /** v1 (UpdateSymbol.py): full refresh. */
-  def stockV1(spark: SparkSession, api: StockApi, symbols: Seq[String],
-              table: VersionedTable): Unit =
-    table.fullRefresh(StockSource.bars(spark, api, symbols))
-
   /** v2 (UpdateSymbol_v2.py): incremental append + SELECT DISTINCT *. */
   def stockV2(spark: SparkSession, api: StockApi, symbols: Seq[String],
               table: VersionedTable): Unit = {

@@ -1,7 +1,7 @@
 package graft.scale
 
 import graft.core.{Q, Tables}
-import graft.write.VersionedTable
+import graft.write.{TombstoneSet, VersionedTable, Writers}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,8 +42,12 @@ object AnnIndex {
     new VersionedTable(spark, s"$root/centroids")
   private def postingsTable(spark: SparkSession, root: String) =
     new VersionedTable(spark, s"$root/postings")
-  private def tombstonesTable(spark: SparkSession, root: String) =
-    new VersionedTable(spark, s"$root/tombstones")
+  /** The index's deleted ids — shared with [[Pq]], whose postings key on
+    * `nid` the same way.
+    */
+  private[scale] def tombstoneSet(spark: SparkSession, root: String,
+                                  maxChainDepth: Int = 16) =
+    new TombstoneSet(spark, s"$root/tombstones", "nid", maxChainDepth)
 
   /** Build (or rebuild) the index at `root`: train centroids over a bounded
     * sample, assign every corpus vector its nearest cell, quantize to int8
@@ -132,34 +136,30 @@ object AnnIndex {
       .withColumn("cid", element_at(
         Similarity.nearestCidsExpr(cents, col(vecCol).cast("array<double>"), 1), 1))
       .select(col(idCol).cast("long").as("nid"), col("qcode").as("code"), col("cid"))
-      // lazy checkpoint (r21): the touched-cid collect below materializes it
-      // — one job for quantize+assign+collect instead of two
+      // lazy checkpoint (r21): the touched-cid collect in upsertTouchedCells
+      // materializes it — one job for quantize+assign+collect instead of two
       .localCheckpoint(false)
+    upsertTouchedCells(root, newPostings)
+    IvfIndex(root, cents.length)
+  }
+
+  /** The append shared with [[Pq.appendToIvfPqIndex]]: upsert `newPostings`
+    * (keyed on nid, partitioned by cid) into the cells it touches — only
+    * those cells are read and rewritten, every other cell is inherited by
+    * the patch version — after clearing any tombstone its nids carry (a
+    * re-ingested id un-deletes; latest-op-wins across the append/delete
+    * history). The tombstones clear BEFORE the postings promote, the order
+    * [[graft.write.TombstoneSet.remove]] documents.
+    */
+  private[scale] def upsertTouchedCells(root: String, newPostings: DataFrame): Unit = {
+    val spark = newPostings.sparkSession
     val touched = newPostings.select("cid").distinct().collect().map(_.getInt(0))
     val pt = postingsTable(spark, root)
     val existingTouched = pt.read()
       .filter(col("cid").isin(touched.map(Integer.valueOf): _*))
-    val merged = graft.write.Writers.upsert(existingTouched, newPostings, Seq("nid"))
-    // a re-ingested id un-deletes: clear any tombstone the batch's nids
-    // carry, or the fresh posting would stay invisible at probe time
-    // (latest-op-wins across the append/delete history). The tombstone
-    // table is delete-batch-sized, so the rewrite is O(tombstones).
-    // Order matters: the tombstones clear BEFORE the postings promote. A
-    // crash between the two then leaves the id un-tombstoned with its old
-    // (or no) posting — a state the caller's retry of the append converges
-    // out of. The reverse order is NOT convergent: posting promoted, id
-    // still tombstoned → the next compaction physically purges the fresh
-    // posting and truncates the tombstone, silently degrading
-    // latest-op-wins to delete-wins.
-    val tt = tombstonesTable(spark, root)
-    if (tt.exists)
-      // no checkpoint needed: the stage write reads v{cur} while writing
-      // v{next} — distinct directories, and the batch side is already
-      // checkpointed, so the one stage job is the whole cost (r21)
-      tt.promote(tt.stage(
-        tt.read().join(newPostings.select("nid"), Seq("nid"), "left_anti")))
-    pt.promote(pt.stagePatch(merged, Seq("cid")))
-    IvfIndex(root, cents.length)
+    val merged = Writers.upsert(existingTouched, newPostings, Seq("nid"))
+    tombstoneSet(spark, root).remove(newPostings)
+    pt.promote(pt.stagePatch(merged))
   }
 
   /** Delete a batch of vector ids from the index WITHOUT touching the
@@ -180,26 +180,13 @@ object AnnIndex {
     */
   def deleteFromIvfIndex(deletedIds: DataFrame, root: String,
                          idCol: String = "vec_id",
-                         maxChainDepth: Int = 4): Unit = {
-    val spark = deletedIds.sparkSession
-    val ids = deletedIds.select(col(idCol).cast("long").as("nid")).distinct()
-    val tt = tombstonesTable(spark, root)
-    if (tt.exists) {
-      // lazy checkpoint + count: one job answers emptiness AND materializes
-      // the blocks the append writes (r21)
-      val fresh = ids.join(tt.read(), Seq("nid"), "left_anti")
-        .localCheckpoint(false)
-      if (fresh.count() > 0) {
-        tt.promote(tt.stageAppend(fresh))
-        tt.compactIfNeeded(maxChainDepth)
-      }
-    } else tt.promote(tt.stage(ids))
-  }
+                         maxChainDepth: Int = 4): Unit =
+    tombstoneSet(deletedIds.sparkSession, root, maxChainDepth).add(deletedIds, idCol)
 
   /** The ids currently tombstoned (empty frame if none ever were). */
   def tombstones(spark: SparkSession, root: String): DataFrame = {
-    val tt = tombstonesTable(spark, root)
-    if (tt.exists) tt.read()
+    val ts = tombstoneSet(spark, root)
+    if (ts.exists) ts.table.read()
     else spark.range(0).select(col("id").as("nid"))
   }
 
@@ -209,29 +196,13 @@ object AnnIndex {
     * self-contained whole-directory version — the LSM compaction step.
     * Re-staged partitioned by cid, so probe directory-pruning is preserved;
     * probe answers are identical before and after (q111 certifies this
-    * through the oracle). Run periodically, between appends — the promote
-    * carries the current tag, so any batch-stamped protocol survives.
+    * through the oracle). Pending tombstones purge in the same rewrite
+    * ([[graft.write.TombstoneSet.purge]]). Run periodically, between
+    * appends — the promote carries the current tag, so any batch-stamped
+    * protocol survives.
     */
-  def compactIvfIndex(spark: SparkSession, root: String): Unit = {
-    val pt = postingsTable(spark, root)
-    val tt = tombstonesTable(spark, root)
-    // lazy checkpoint + count: ONE job answers emptiness and materializes
-    // the blocks the purge join reads (r21; was checkpoint + isEmpty = two)
-    val dead0 = if (tt.exists) Some(tt.read().localCheckpoint(false)) else None
-    val dead = dead0.filter(_.count() > 0)
-    if (dead.nonEmpty) {
-      // physical delete: rewrite the postings without the tombstoned rows,
-      // then truncate the tombstone set in a SECOND promote. Crash between
-      // the two leaves stale tombstones over already-purged postings —
-      // the anti-join then matches nothing, so serving stays correct and
-      // the next compaction clears them (convergent, like the streaming
-      // sinks' half-stamped pairs).
-      val purged = pt.read().join(dead.get, Seq("nid"), "left_anti")
-      pt.promote(pt.stage(purged, Seq("cid")), pt.currentTag)
-      tt.promote(tt.stage(dead.get.limit(0)))
-    } else pt.compact(Seq("cid"))
-    ()
-  }
+  def compactIvfIndex(spark: SparkSession, root: String): Unit =
+    tombstoneSet(spark, root).purge(postingsTable(spark, root))
 
   /** Split oversized cells — the maintenance op the append path makes
     * necessary: [[appendToIvfIndex]] assigns every new vector into the
@@ -311,8 +282,7 @@ object AnnIndex {
       }
     }
     if (split.isEmpty) return Nil
-    pt.promote(pt.stagePatch(patches.reduce(_ unionByName _), Seq("cid")),
-      pt.currentTag)
+    pt.promote(pt.stagePatch(patches.reduce(_ unionByName _)), pt.currentTag)
     import spark.implicits._
     val ct = centroidsTable(spark, root)
     val updated = (cents ++ newCents).toSeq.sortBy(_._1).toDF("cid", "centroid")
@@ -371,13 +341,8 @@ object AnnIndex {
     // (PushedFilters beside the cid pruning — PlanSpec law), so rows the
     // filter rejects never reach the scoring heap
     val postings0 = pred.fold(postings1)(postings1.filter)
-    // tombstoned ids are invisible until compaction physically drops them;
-    // the tombstone set is delete-batch-sized, so AQE broadcasts the
-    // anti-join side — no extra shuffle on the postings
-    val tt = tombstonesTable(spark, root)
-    val postings =
-      if (tt.exists) postings0.join(broadcast(tt.read()), Seq("nid"), "left_anti")
-      else postings0
+    // tombstoned ids are invisible until compaction physically drops them
+    val postings = tombstoneSet(spark, root).minus(postings0)
     val scored = postings.join(broadcast(q), Seq("cid"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), Similarity.int8Dot(col("qc"), col("code")).as("score"))

@@ -344,7 +344,7 @@ object Graph {
         val merged = Writers.upsert(existing, rows, Seq(key))
           .withColumn("__b", bucket(col(key)))
           .repartition(buckets.length, col("__b"))
-        table.promote(table.stagePatch(merged, Seq("__b")))
+        table.promote(table.stagePatch(merged))
       }
     }
 
@@ -363,7 +363,7 @@ object Graph {
           .unionByName(rows)
           .withColumn("__b", bucket(col(key)))
           .repartition(buckets.length, col("__b"))
-        table.promote(table.stagePatch(merged, Seq("__b")))
+        table.promote(table.stagePatch(merged))
       }
     }
 
@@ -430,9 +430,9 @@ object Graph {
       lastAppendStats = AppendStats(patchRounds(
         Seq(
           () => eo.promote(eo.stagePatch(
-            eoM.repartition(srcBuckets.length.max(1), col("__b")), Seq("__b"))),
+            eoM.repartition(srcBuckets.length.max(1), col("__b")))),
           () => ei.promote(ei.stagePatch(
-            eiM.repartition(dstBuckets.length.max(1), col("__b")), Seq("__b")))),
+            eiM.repartition(dstBuckets.length.max(1), col("__b"))))),
         () => upsertByKey(t("rank0"), newSrcs.get, "node"),
         eoV, changedInputs, cone0, ranks0,
         // exact recompute of the dirty nodes from the patched (t-1)
@@ -551,9 +551,9 @@ object Graph {
       lastDeleteStats = AppendStats(patchRounds(
         Seq(
           () => eo.promote(eo.stagePatch(
-            eoM.repartition(eoTouch.length, col("__b")), Seq("__b"))),
+            eoM.repartition(eoTouch.length, col("__b")))),
           () => ei.promote(ei.stagePatch(
-            eiM.repartition(eiTouch.length.max(1), col("__b")), Seq("__b")))),
+            eiM.repartition(eiTouch.length.max(1), col("__b"))))),
         () => patchByKey(t("rank0"), r0Gone.get,
           del.limit(0).withColumn("rank", lit(Scale)), "node"),
         eoV, changedInputs, cone0, ranks0,
@@ -882,21 +882,13 @@ object Graph {
     * relation and two hash aggregations — (node, label) partial counts
     * collapse map-side, then a max-of-struct per node picks (count DESC,
     * label ASC) without a window. Edges are the cached loop invariant.
+    * Computed as [[labelPropagationWeighted]] over unit weights (a count
+    * is a sum of ones).
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
-                       policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame = {
-    val e = policy.checkpoint(edges.select("src", "dst"))
-    var labels = policy.checkpoint(e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label")))
-    for (_ <- 1 to rounds) {
-      labels = policy.checkpoint(e.join(labels, e("dst") === labels("node"))
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("c"))
-        .groupBy("src")
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("src").as("node"), (-col("m.nl")).as("label")))
-    }
-    labels
-  }
+                       policy: CheckpointPolicy = CheckpointPolicy.Local): DataFrame =
+    labelPropagationWeighted(edges.select(col("src"), col("dst"), lit(1L).as("w")),
+      rounds, policy)
 
   /** Personalized PageRank (the seed-teleport variant): the damped
     * restart mass lands ONLY on the seed set instead of uniformly — the
@@ -907,34 +899,12 @@ object Graph {
     * [[Base]] restart each round; the damped flow term is [[pageRank]]'s.
     * Same outdeg ≥ 1 ∧ indeg ≥ 1 contract (undirected both-direction
     * encoding); a node's rank is 0 until seed mass reaches it, exactly
-    * `dist(seeds, node)` rounds out.
+    * `dist(seeds, node)` rounds out. Computed as [[trustRank]] over unit
+    * weights (`rank * 1 div outdeg` is the uniform split).
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
-                           iters: Int): DataFrame = {
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = edges.join(deg, "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .localCheckpoint()
-    val sd = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .withColumn("__s", lit(1L)).localCheckpoint()
-    def restart(nodes: DataFrame) = nodes
-      .join(sd, Seq("node"), "left")
-      .select(col("node"), when(col("__s").isNotNull, lit(Base))
-        .otherwise(lit(0L)).as("base"))
-    var ranks = restart(deg.select(col("src").as("node")))
-      .select(col("node"),
-        when(col("base") > 0, lit(Scale)).otherwise(lit(0L)).as("rank"))
-    for (_ <- 0 until iters) {
-      val flow = e.join(ranks, e("src") === ranks("node"))
-        .select(col("dst"), expr("rank div outdeg").as("contrib"))
-        .groupBy("dst").agg(sum("contrib").as("c"))
-      ranks = restart(flow.select(col("dst").as("node")))
-        .join(flow.withColumnRenamed("dst", "node"), "node")
-        .select(col("node"),
-          (col("base") + expr(s"($DampNum * c) div $DampDen")).as("rank"))
-    }
-    ranks
-  }
+                           iters: Int): DataFrame =
+    trustRank(edges.select(col("src"), col("dst"), lit(1L).as("w")), seeds, iters)
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): the
     * seed-personalized walk of [[personalizedPageRank]] with WEIGHTED

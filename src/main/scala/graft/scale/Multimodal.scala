@@ -326,7 +326,6 @@ object Multimodal {
     */
   private[scale] def mp4SampleTableEx(b: Array[Byte],
       accept: String => Boolean): Option[(String, Int, Int, Seq[(Long, Int)])] = {
-    def u16be(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
     def u32be(i: Int): Long =
       ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
         ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)

@@ -191,34 +191,17 @@ object Pq {
     val newPostings = Kmeans.assignNearest(Kmeans.quantizeGrid(newVectors), coarse)
       .select(col("vec_id").cast("long").as("nid"),
         pqCodesExpr(book, col("gcode")).as("codes"), col("cid"))
-      // lazy checkpoint (r21): the touched-cid collect materializes it
+      // lazy checkpoint (r21): the first action on it materializes it
       .localCheckpoint(false)
-    val touched = newPostings.select("cid").distinct().collect().map(_.getInt(0))
-    val pt = table(spark, root, "postings")
     if (assertNewIds) {
-      val stale = pt.read().select("nid", "cid")
+      val stale = table(spark, root, "postings").read().select("nid", "cid")
         .join(newPostings.select(col("nid"), col("cid").as("new_cid")), "nid")
         .filter(col("cid") =!= col("new_cid")).limit(1).count()
       require(stale == 0L,
         s"appendToIvfPqIndex: incoming nid already exists in a different cell " +
           s"of $root/postings — delete-then-append or rebuild (see scaladoc)")
     }
-    val existingTouched = pt.read()
-      .filter(col("cid").isin(touched.map(Integer.valueOf): _*))
-    val merged = graft.write.Writers.upsert(existingTouched, newPostings, Seq("nid"))
-    // a re-ingested id un-deletes (the [[AnnIndex.appendToIvfIndex]]
-    // latest-op-wins rule); the tombstone table is delete-batch-sized,
-    // so the rewrite is O(tombstones). Tombstones clear BEFORE the
-    // postings promote — a crash between the two is then convergent under
-    // caller retry, where the reverse order lets the next compaction purge
-    // the fresh posting (delete-wins; see AnnIndex.appendToIvfIndex).
-    val tt = table(spark, root, "tombstones")
-    if (tt.exists)
-      // no checkpoint needed: the stage write reads v{cur} while writing
-      // v{next} — distinct directories (r21)
-      tt.promote(tt.stage(
-        tt.read().join(newPostings.select("nid"), Seq("nid"), "left_anti")))
-    pt.promote(pt.stagePatch(merged, Seq("cid")))
+    AnnIndex.upsertTouchedCells(root, newPostings)
     IvfPqIndex(root, coarse.length)
   }
 
@@ -232,49 +215,18 @@ object Pq {
     */
   def deleteFromIvfPqIndex(deletedIds: DataFrame, root: String,
                            idCol: String = "vec_id",
-                           maxChainDepth: Int = 4): Unit = {
-    val spark = deletedIds.sparkSession
-    val ids = deletedIds.select(col(idCol).cast("long").as("nid")).distinct()
-    val tt = table(spark, root, "tombstones")
-    if (tt.exists) {
-      // lazy checkpoint + count: one job answers emptiness AND
-      // materializes the blocks the append writes (r21)
-      val fresh = ids.join(tt.read(), Seq("nid"), "left_anti")
-        .localCheckpoint(false)
-      if (fresh.count() > 0) {
-        tt.promote(tt.stageAppend(fresh))
-        tt.compactIfNeeded(maxChainDepth)
-      }
-    } else tt.promote(tt.stage(ids))
-  }
+                           maxChainDepth: Int = 4): Unit =
+    AnnIndex.deleteFromIvfIndex(deletedIds, root, idCol, maxChainDepth)
 
   /** The ids currently tombstoned (empty frame if none ever were). */
-  def pqTombstones(spark: SparkSession, root: String): DataFrame = {
-    val tt = table(spark, root, "tombstones")
-    if (tt.exists) tt.read()
-    else spark.range(0).select(col("id").as("nid"))
-  }
+  def pqTombstones(spark: SparkSession, root: String): DataFrame =
+    AnnIndex.tombstones(spark, root)
 
-  /** Collapse the postings patch chain; if tombstones are pending, the
-    * rewrite drops the dead rows and a second promote truncates the set
-    * (crash between the two leaves stale tombstones over purged postings —
-    * the anti-join then matches nothing, convergent like
-    * [[AnnIndex.compactIvfIndex]]).
+  /** Collapse the postings patch chain; pending tombstones purge in the same
+    * rewrite — the [[AnnIndex.compactIvfIndex]] protocol.
     */
-  def compactIvfPqIndex(spark: SparkSession, root: String): Unit = {
-    val pt = table(spark, root, "postings")
-    val tt = table(spark, root, "tombstones")
-    // lazy checkpoint + count: ONE job answers emptiness and materializes
-    // the blocks the purge join reads (r21)
-    val dead0 = if (tt.exists) Some(tt.read().localCheckpoint(false)) else None
-    val dead = dead0.filter(_.count() > 0)
-    if (dead.nonEmpty) {
-      val purged = pt.read().join(dead.get, Seq("nid"), "left_anti")
-      pt.promote(pt.stage(purged, Seq("cid")), pt.currentTag)
-      tt.promote(tt.stage(dead.get.limit(0)))
-    } else pt.compact(Seq("cid"))
-    ()
-  }
+  def compactIvfPqIndex(spark: SparkSession, root: String): Unit =
+    AnnIndex.compactIvfIndex(spark, root)
 
   /** Probe: route each query to its `nProbe` nearest coarse cells (exact
     * integer distances, ties to the smaller cid), scan ONLY those cells'
@@ -322,10 +274,7 @@ object Pq {
     // filtered search: predicate pushed into the codes-only scan, pre-heap
     val postings0 = pred.fold(postings1)(postings1.filter)
     // tombstoned ids are invisible until compaction drops them physically
-    val tt = table(spark, root, "tombstones")
-    val postings =
-      if (tt.exists) postings0.join(broadcast(tt.read()), Seq("nid"), "left_anti")
-      else postings0
+    val postings = AnnIndex.tombstoneSet(spark, root).minus(postings0)
     val cand = postings.join(broadcast(route), Seq("cid"))
     val scored = cand
       .select(col("qid"), col("nid"), posexplode(col("codes")).as(Seq("m", "bcid")))

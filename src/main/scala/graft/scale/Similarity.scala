@@ -495,31 +495,6 @@ object Similarity {
     transform(slice(reverse(array_sort(scored)), 1, topN), s => s.getField("cid"))
   }
 
-  /** Fraction of the corpus an average query scans under IVF with these
-    * parameters (sum of probed-cell sizes / n, averaged over queries) — the
-    * SimilaritySpec asserts this stays a small constant, i.e. that declared
-    * parameters never degenerate into a linear scan in disguise.
-    */
-  def ivfScanFraction(corpus: DataFrame, queries: DataFrame,
-                      nCentroids: Int = -1, nProbe: Int = 3, trainIters: Int = 4,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): Double = {
-    val nCents = resolveNCentroids(corpus, nCentroids)
-    val cents = centroidsFor(corpus, nCents, trainIters, idCol, vecCol)
-    val n = corpus.count().toDouble
-    val cellSizes = corpus
-      .withColumn("cid", element_at(
-        nearestCidsExpr(cents, col(vecCol).cast("array<double>"), 1), 1))
-      .groupBy("cid").count()
-    val probed = queries
-      .withColumn("cid", explode(
-        nearestCidsExpr(cents, col(vecCol).cast("array<double>"), nProbe)))
-      .select(col(idCol).as("qid"), col("cid"))
-    val perQuery = probed.join(cellSizes, Seq("cid"), "left")
-      .groupBy("qid").agg(sum(coalesce(col("count"), lit(0L))).as("scanned"))
-    val avgScanned = perQuery.agg(avg("scanned")).head().getDouble(0)
-    avgScanned / n
-  }
-
   /** nCentroids <= 0 resolves to ceil(sqrt(n)) — the standard IVF sizing:
     * cells hold ~sqrt(n) vectors, so probe cost per query is
     * nProbe·sqrt(n) and the scan fraction ≈ nProbe/sqrt(n) SHRINKS as the

@@ -30,7 +30,7 @@ object AnnStream {
         // batch; past maxChainDepth the chain collapses (cid partitioning
         // preserved, so probe directory-pruning survives the compaction)
         new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
-          .compactIfNeeded(maxChainDepth, Seq("cid"))
+          .compactIfNeeded(maxChainDepth)
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -77,7 +77,7 @@ object AnnStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.scale.Pq.appendToIvfPqIndex(batch, root)
         new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
-          .compactIfNeeded(maxChainDepth, Seq("cid"))
+          .compactIfNeeded(maxChainDepth)
         ()
       }
       .trigger(Trigger.AvailableNow())

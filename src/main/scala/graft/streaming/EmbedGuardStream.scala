@@ -82,8 +82,8 @@ final class EmbedGuardIndex(spark: SparkSession, root: String,
     StagedCommit(Some(tag),
       dropped -> (() => dropped.stageAppendOrNew(nulls)),
       admitted -> (() => admitted.stageAppendOrNew(adm)))
-    if (dropped.chainDepth > maxChainDepth) { dropped.compact(); () }
-    if (admitted.chainDepth > maxChainDepth) { admitted.compact(); () }
+    dropped.compactIfNeeded(maxChainDepth)
+    admitted.compactIfNeeded(maxChainDepth)
   }
 
   /** Every admitted vector id. */

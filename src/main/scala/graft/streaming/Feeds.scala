@@ -34,9 +34,10 @@ object Feeds {
     * coalesce(1) append emitted an empty schema-bearing part file (its own
     * micro-batch with its own batch id) — so an empty batch would SHIFT
     * every later batch id relative to the N-pass form. Every current call
-    * site feeds provably non-empty batches; the mtime loop below asserts
-    * one file per expected index so a future empty-batch feed fails loudly
-    * instead of silently renumbering batches.
+    * site feeds provably non-empty batches; every index is checked before
+    * any file moves, so an empty-batch feed fails loudly (naming all empty
+    * indexes) instead of silently renumbering batches or leaving a partial
+    * feed behind.
     */
   def write(df: DataFrame, batch: Column, n: Int, dir: String): Unit = {
     val stage = s"$dir/__stage"
@@ -44,41 +45,6 @@ object Feeds {
       .filter(col("__b") >= 0 && col("__b") < n)
       .repartition(n, col("__b"))
       .write.mode("overwrite").partitionBy("__b").parquet(stage)
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    // explicit mtimes: strictly ascending, in the past, one second apart —
-    // the FileStreamSource sort key, fully pinned
-    val t0 = System.currentTimeMillis() - (n + 2) * 1000L
-    for (i <- 0 until n) {
-      val pdir = Paths.get(stage, s"__b=$i")
-      // an EMPTY batch cannot reproduce the historical feed (see scaladoc:
-      // the coalesce(1) form gave it an empty file and a batch id; dynamic
-      // partitionBy emits nothing, shifting every later id) — fail loudly
-      require(Files.isDirectory(pdir),
-        s"feed batch $i of $n is empty — batch ids would silently shift")
-      locally {
-        val parts = {
-          val s = Files.list(pdir)
-          try {
-            val it = s.iterator()
-            val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-            while (it.hasNext) {
-              val p = it.next()
-              val nm = p.getFileName.toString
-              if (nm.startsWith("part-") && nm.endsWith(".parquet")) out += p
-            }
-            out.toSeq
-          } finally s.close()
-        }
-        require(parts.size <= 1,
-          s"feed batch $i produced ${parts.size} files; repartition by the batch index must yield one")
-        parts.foreach { p =>
-          val dst = base.resolve(f"batch-$i%03d.parquet")
-          Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + i * 1000L))
-        }
-      }
-    }
     def rm(p: java.nio.file.Path): Unit = {
       if (Files.isDirectory(p)) {
         val s = Files.list(p)
@@ -86,6 +52,44 @@ object Feeds {
         finally s.close()
       }
       Files.deleteIfExists(p); ()
+    }
+    // an EMPTY batch cannot reproduce the historical feed (see scaladoc:
+    // the coalesce(1) form gave it an empty file and a batch id; dynamic
+    // partitionBy emits nothing, shifting every later id) — fail loudly,
+    // naming every empty index, before any file moves
+    val empty = (0 until n).filterNot(i => Files.isDirectory(Paths.get(stage, s"__b=$i")))
+    if (empty.nonEmpty) {
+      rm(Paths.get(stage))
+      throw new IllegalArgumentException(s"feed batches ${empty.mkString(", ")} of $n " +
+        "are empty — batch ids would silently shift")
+    }
+    val base = Paths.get(dir)
+    Files.createDirectories(base)
+    // explicit mtimes: strictly ascending, in the past, one second apart —
+    // the FileStreamSource sort key, fully pinned
+    val t0 = System.currentTimeMillis() - (n + 2) * 1000L
+    for (i <- 0 until n) {
+      val pdir = Paths.get(stage, s"__b=$i")
+      val parts = {
+        val s = Files.list(pdir)
+        try {
+          val it = s.iterator()
+          val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+          while (it.hasNext) {
+            val p = it.next()
+            val nm = p.getFileName.toString
+            if (nm.startsWith("part-") && nm.endsWith(".parquet")) out += p
+          }
+          out.toSeq
+        } finally s.close()
+      }
+      require(parts.size <= 1,
+        s"feed batch $i produced ${parts.size} files; repartition by the batch index must yield one")
+      parts.foreach { p =>
+        val dst = base.resolve(f"batch-$i%03d.parquet")
+        Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + i * 1000L))
+      }
     }
     rm(Paths.get(stage))
   }

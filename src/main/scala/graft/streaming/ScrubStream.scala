@@ -40,7 +40,7 @@ final class ScrubIndex(spark: SparkSession, root: String, n: Int = 8,
     val scrubbed = Curation.scrubAgainstGrams(
       batch.filter(col("text").isNotNull), grams.read(), n)
     clean.promote(clean.stageAppendOrNew(scrubbed), Some(tag))
-    if (clean.chainDepth > maxChainDepth) { clean.compact(); () }
+    clean.compactIfNeeded(maxChainDepth)
   }
 }
 

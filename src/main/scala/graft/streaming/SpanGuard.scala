@@ -87,8 +87,8 @@ final class SpanGuardIndex(spark: SparkSession, root: String,
           else ds.select("h").distinct()
         spans.stageAppendOrNew(fresh)
       })): _*)
-    if (growSpans && spans.chainDepth > maxChainDepth) { spans.compact(); () }
-    if (admitted.chainDepth > maxChainDepth) { admitted.compact(); () }
+    if (growSpans) spans.compactIfNeeded(maxChainDepth)
+    admitted.compactIfNeeded(maxChainDepth)
   }
 }
 

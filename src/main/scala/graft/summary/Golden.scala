@@ -57,12 +57,6 @@ object Golden {
   /** Dependency-ordered spec list (Build_Summary_v3.py:32-36's tables_load). */
   def all: Seq[SummarySpec] = Seq(mauSpec, npsSpec, channelSpec)
 
-  /** Build every summary in dependency order into one warehouse. */
-  def buildAll(spark: SparkSession, warehouseRoot: String): Unit = {
-    val builder = new SummaryBuilder(spark, warehouseRoot)
-    all.foreach(builder.build)
-  }
-
   private def buildOne(s: SparkSession, d: String, spec: SummarySpec) = {
     val wh = Files.createTempDirectory("graft-wh").toString
     // the events view is scoped to the build (registered by the builder,

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** The shared LSM tombstone-set protocol used by every persistent index
   * with takedown deletes ([[graft.streaming.PhashIndex]],
   * [[graft.streaming.VideoPhashIndex]], [[graft.streaming.NearDupIndex]],
-  * [[graft.streaming.PostingsIndex]],
-  * [[graft.scale.NnDescent.NavIndex]]): a [[VersionedTable]] of one long
-  * id column.
+  * [[graft.streaming.PostingsIndex]], [[graft.scale.NnDescent.NavIndex]],
+  * [[graft.scale.AnnIndex]] and [[graft.scale.Pq]]): a [[VersionedTable]]
+  * of one long id column.
   *
   *  - [[add]]: O(delete-batch) dedup append — the primary tables are never
   *    touched or versioned by a delete. Unknown ids are legal no-ops;
@@ -20,14 +20,19 @@ import org.apache.spark.sql.functions._
   *    the dead ids (each promote carries its table's current batch stamp so
   *    replay protection survives), THEN truncate the set. A crash between
   *    the promotes leaves stale tombstones over already-purged rows — the
-  *    anti-joins match nothing and the next purge clears them (convergent,
-  *    the [[graft.scale.AnnIndex]] argument).
-  *  - [[remove]]: the un-delete clear (re-admission of a tombstoned id must
-  *    drop the tombstone BEFORE the primary promote — see
-  *    NnDescent.NavIndex.append for the ordering argument).
+  *    anti-joins match nothing and the next purge clears them
+  *    (convergent).
+  *  - [[remove]]: the un-delete clear. Re-admission of a tombstoned id must
+  *    drop the tombstone BEFORE the primary promote: a crash between the
+  *    two leaves the id un-tombstoned with its old (or no) row, which the
+  *    caller's retry converges out of. The reverse order is not convergent
+  *    — row promoted, id still tombstoned, so the next purge drops the
+  *    fresh row and latest-op-wins silently degrades to delete-wins.
   *
   * Extracted because five hand-rolled copies had already drifted in their
-  * purge promote counts and chain-compaction routing.
+  * purge promote counts and chain-compaction routing; the IVF and IVF-PQ
+  * copies followed once [[VersionedTable]] kept each table's partition
+  * column, so [[purge]] rewrites their cid-partitioned postings as is.
   *
   * Job accounting (the r21 optimization pass): lifecycle queries call
   * [[dead]]/[[minus]] once per serve PHASE — historically an eager

@@ -343,6 +343,13 @@ final class VersionedTable(spark: SparkSession, root: String) {
     }
   }
 
+  /** The partition column of version `v`, read from its `col=value` units
+    * (empty = unpartitioned). The layout lives with the versions, so
+    * restaging, patching and compacting keep it without being told.
+    */
+  private def partitionColsOf(v: Int): Seq[String] =
+    entries(v).map(_._2).filter(_.contains('=')).map(_.takeWhile(_ != '=')).distinct
+
   /** Stage a PATCH version: `touched` must hold the COMPLETE replacement
     * rows for every partition value it contains; all other partitions of the
     * current version are inherited by reference through the new version's
@@ -351,15 +358,17 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * immutable and atomically promoted like any other: readers resolve the
     * file list only after the manifest flips, and the base version's files
     * are never modified. On an object store the file list is the same
-    * manifest-of-objects a Delta/Iceberg commit writes.
+    * manifest-of-objects a Delta/Iceberg commit writes. The base version
+    * must be partitioned; the patch keeps its column.
     */
-  def stagePatch(touched: DataFrame, partitionCols: Seq[String]): Int = {
-    require(partitionCols.size == 1,
-      "stagePatch supports exactly one partition column")
+  def stagePatch(touched: DataFrame): Int = {
     val base = currentVersion.getOrElse(throw new IllegalStateException(
       s"stagePatch needs a committed base version at $root"))
+    val partitionCol = partitionColsOf(base)
+    require(partitionCol.nonEmpty,
+      s"stagePatch needs a partitioned base version; $root/v$base has no partition directories")
     val next = base + 1
-    touched.write.mode("overwrite").partitionBy(partitionCols: _*)
+    touched.write.mode("overwrite").partitionBy(partitionCol: _*)
       .parquet(s"$root/v$next")
     captureSchema(next)
     val newDirs = partitionDirs(next)
@@ -375,11 +384,11 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * the LSM compaction step that bounds how many historical versions a
     * read must union across. The promote carries the current tag forward,
     * so an exactly-once streaming sink's replay protection survives a
-    * compaction running between batches. Pass the table's partition
-    * column(s) to keep directory pruning for partitioned chains.
+    * compaction running between batches. A partitioned chain stays
+    * partitioned by its column, so directory pruning survives.
     */
-  def compact(partitionCols: Seq[String] = Nil): Int = {
-    val v = stage(read(), partitionCols)
+  def compact(): Int = {
+    val v = stage(read())
     promote(v, currentTag)
     v
   }
@@ -400,9 +409,9 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * trade. The compaction promote carries the current tag, so exactly-once
     * batch stamping survives it. Returns whether a compaction fired.
     */
-  def compactIfNeeded(maxDepth: Int, partitionCols: Seq[String] = Nil): Boolean = {
+  def compactIfNeeded(maxDepth: Int): Boolean = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    if (exists && chainDepth > maxDepth) { compact(partitionCols); true }
+    if (exists && chainDepth > maxDepth) { compact(); true }
     else false
   }
 
@@ -510,17 +519,21 @@ final class VersionedTable(spark: SparkSession, root: String) {
     (removedVersions.toSeq, removedUnits)
   }
 
-  /** Stage `df` as the next version; returns the staged version number
-    * WITHOUT promoting it (used by the validated-CTAS flow, W5).
+  /** Stage `df` as the next version, partitioned like the current one;
+    * returns the staged version number WITHOUT promoting it (used by the
+    * validated-CTAS flow, W5).
     */
-  def stage(df: DataFrame): Int = stage(df, Nil)
+  def stage(df: DataFrame): Int = stage(df, currentVersion.toSeq.flatMap(partitionColsOf))
 
-  /** Stage with hive-style partition directories — readers filtering on a
-    * partition column then prune whole directories (PartitionFilters), which
-    * is what lets an index probe scan only the cells it needs
-    * ([[graft.scale.AnnIndex]]).
+  /** Stage with a hive-style partition column (at most one; `Nil` =
+    * unpartitioned) — the way a first or rebuilt version sets its layout.
+    * Readers filtering on the column then prune whole directories
+    * (PartitionFilters), which is what lets an index probe scan only the
+    * cells it needs ([[graft.scale.AnnIndex]]).
     */
   def stage(df: DataFrame, partitionCols: Seq[String]): Int = {
+    require(partitionCols.size <= 1,
+      s"VersionedTable partitions by at most one column, got ${partitionCols.mkString(", ")}")
     val next = currentVersion.getOrElse(-1) + 1
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.write.VersionedTable
+import org.apache.spark.sql.DataFrame
 
 /** Crash consistency of every batch-stamped multi-table index, proven by
   * one systematic matrix instead of per-file arguments: run two batches,
@@ -94,6 +95,49 @@ class CrashMatrixSpec extends SparkSpec {
     crashMatrix(new Subject(Seq(ix.dropped, ix.admitted),
       i => ix.processBatch(batches(i).toDF("vec_id", "embedding"), i),
       () => (rows(ix.served().as[Long]), rows(ix.droppedNull().as[Long]))))
+  }
+
+  /** The IVF families: batch 0 tombstones the %13 == 2 stratum, batch 1
+    * appends fresh twins plus one tombstoned id (the un-delete), so both
+    * members promote; served = every full-coverage probe row and the set.
+    */
+  private def ivfSubject(root: String, nCells: Int, append: DataFrame => Unit,
+                         delete: DataFrame => Unit, probe: (DataFrame, Int) => DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val emb = ivfCorpus
+    val twins = emb.filter(col("vec_id") < 5)
+      .withColumn("vec_id", col("vec_id") + 100000)
+      .withColumn("embedding",
+        transform(col("embedding"), x => x + lit(0.02f)).cast("array<float>"))
+    new Subject(
+      Seq("tombstones", "postings").map(t => new VersionedTable(spark, s"$root/$t")),
+      {
+        case 0 => delete(emb.select("vec_id").filter(col("vec_id") % 13 === 2))
+        case _ => append(twins.unionByName(emb.filter(col("vec_id") === 2)))
+      },
+      () => Seq(probe(emb.filter(col("vec_id") < 3), nCells),
+        graft.scale.AnnIndex.tombstones(spark, root)).map(_.collect().map(_.toString).sorted.toSeq))
+  }
+
+  private lazy val ivfCorpus = graft.core.Tables.embeddings(spark, sfDir)
+    .select("vec_id", "embedding").cache()
+
+  test("AnnIndex (IVF): tombstones, postings") {
+    import graft.scale.AnnIndex
+    val r = root("ivf")
+    val idx = AnnIndex.buildIvfIndex(ivfCorpus, r)
+    crashMatrix(ivfSubject(r, idx.nCentroids,
+      AnnIndex.appendToIvfIndex(_, r), AnnIndex.deleteFromIvfIndex(_, r),
+      (q, n) => AnnIndex.probeIvf(spark, r, q, 10, nProbe = n)))
+  }
+
+  test("Pq (IVF-PQ): tombstones, postings") {
+    import graft.scale.Pq
+    val r = root("ivfpq")
+    val idx = Pq.buildIvfPqIndex(ivfCorpus, r)
+    crashMatrix(ivfSubject(r, idx.nCells,
+      Pq.appendToIvfPqIndex(_, r), Pq.deleteFromIvfPqIndex(_, r),
+      (q, n) => Pq.probeIvfPq(spark, r, q, 10, nProbe = n)))
   }
 
   test("SpanGuardIndex: admitted, spans (growing) and admitted alone (frozen)") {

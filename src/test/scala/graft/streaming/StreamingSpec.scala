@@ -233,4 +233,14 @@ class StreamingSpec extends SparkSpec {
     assert(backward === direct, "tombstone retention must make the fold order-robust")
     assert(direct === Map(1L -> "a3", 3L -> "c2", 5L -> "e"))
   }
+
+  test("Feeds.write names every empty batch in one error and moves no file") {
+    val dir = Files.createTempDirectory("graft-feeds").toString
+    val df = Seq(0L, 1L, 3L).toDF("k")
+    val e = intercept[IllegalArgumentException](Feeds.write(df, col("k"), 5, dir))
+    assert(e.getMessage.contains("feed batches 2, 4 of 5"), e.getMessage)
+    val left = Files.list(java.nio.file.Paths.get(dir))
+    try assert(!left.iterator().hasNext, "a failed feed must leave nothing behind")
+    finally left.close()
+  }
 }

@@ -7,7 +7,8 @@ import java.util.concurrent.atomic.AtomicInteger
 /** The shared commit helper's laws: a bounded pool, settle-before-rethrow,
   * promote only after every stage settled, nesting without deadlock, the
   * tag skip, and the caller's job group carried into the pool. Plus the
-  * guard that keeps hand-rolled futures out of the engine.
+  * guards that keep hand-rolled futures and tombstone tables out of the
+  * engine.
   */
 class StagedCommitSpec extends SparkSpec {
   import spark.implicits._
@@ -115,21 +116,31 @@ class StagedCommitSpec extends SparkSpec {
     assert(after.forall(_ == null))
   }
 
-  test("no hand-rolled futures: the global EC and Await live only in StagedCommit") {
-    val forbidden = raw"ExecutionContext\.global|Implicits\.global|Await\.".r
+  /** Lines of `src/main/scala` (outside `exempt`) that match `forbidden`. */
+  private def sourceHits(forbidden: scala.util.matching.Regex, exempt: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root: $root missing")
     val stream = Files.walk(root)
-    val hits = try {
+    try {
       import scala.jdk.CollectionConverters._
       stream.iterator().asScala.toSeq
-        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "StagedCommit.scala")
+        .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != exempt)
         .flatMap { p =>
           Files.readAllLines(p).asScala.zipWithIndex.collect {
             case (line, i) if forbidden.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
           }
         }
     } finally stream.close()
+  }
+
+  test("no hand-rolled futures: the global EC and Await live only in StagedCommit") {
+    val hits = sourceHits(raw"ExecutionContext\.global|Implicits\.global|Await\.".r,
+      "StagedCommit.scala")
     assert(hits.isEmpty, "use graft.write.StagedCommit instead:\n" + hits.mkString("\n"))
+  }
+
+  test("no hand-rolled tombstones: only TombstoneSet builds a tombstone table") {
+    val hits = sourceHits("VersionedTable\\(.*tombstones|\"tombstones\"".r, "TombstoneSet.scala")
+    assert(hits.isEmpty, "use graft.write.TombstoneSet instead:\n" + hits.mkString("\n"))
   }
 }

@@ -144,10 +144,9 @@ class VersionedTableSpec extends SparkSpec {
     val t = new VersionedTable(spark, root)
     t.promote(t.stage(Seq((1L, 0), (2L, 1)).toDF("id", "cell"), Seq("cell")))
     for (b <- 1 to 6)
-      t.promote(t.stagePatch(
-        Seq((10L + b, b % 3)).toDF("id", "cell"), Seq("cell")), Some(s"b$b"))
+      t.promote(t.stagePatch(Seq((10L + b, b % 3)).toDF("id", "cell")), Some(s"b$b"))
     assert(t.chainDepth > 1)
-    assert(t.compactIfNeeded(maxDepth = 2, Seq("cell")))
+    assert(t.compactIfNeeded(maxDepth = 2))
     assert(t.chainDepth === 1)
     // hive layout survives: the compacted version has cell= directories
     val dirs = java.nio.file.Files.list(
@@ -156,6 +155,28 @@ class VersionedTableSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       assert(dirs.iterator().asScala.exists(_.getFileName.toString.startsWith("cell=")))
     } finally dirs.close()
+  }
+
+  test("the partition column lives with the versions: stagePatch and compact() keep it") {
+    import org.apache.spark.sql.functions.col
+    val root = s"${tmp()}/t"
+    val t = new VersionedTable(spark, root)
+    t.promote(t.stage(Seq((1L, 0), (2L, 1), (3L, 2)).toDF("nid", "cid"), Seq("cid")))
+    t.promote(t.stagePatch(Seq((2L, 1), (4L, 1)).toDF("nid", "cid")))
+    assert(t.chainDepth === 2)
+    t.compact()
+    assert(t.chainDepth === 1)
+    val probe = t.read().filter(col("cid") === 1)
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*cid[^\\]]*\\].*"),
+      s"compacted chain lost cid directory pruning:\n$plan")
+    assert(probe.select("nid").as[Long].collect().toSet === Set(2L, 4L))
+    // a patch needs partitions to replace: an unpartitioned base refuses it
+    val flatRoot = s"${tmp()}/flat"
+    val flat = new VersionedTable(spark, flatRoot)
+    flat.promote(flat.stage(Seq((1L, 0)).toDF("nid", "cid")))
+    val e = intercept[IllegalArgumentException](flat.stagePatch(Seq((2L, 0)).toDF("nid", "cid")))
+    assert(e.getMessage.contains(flatRoot), e.getMessage)
   }
 
   test("SummaryBuilder eq gate requires exact count") {

@@ -218,7 +218,7 @@ class WritersSpec extends SparkSpec {
     t.promote(t.stage(base, Seq("p")))
     Seq(1 -> 100L, 2 -> 200L, 3 -> 300L).foreach { case (part, delta) =>
       t.promote(t.stagePatch(
-        base.filter(col("p") === part).withColumn("m", col("m") + delta), Seq("p")))
+        base.filter(col("p") === part).withColumn("m", col("m") + delta)))
     }
     (t, s"$root/t")
   }
@@ -256,7 +256,7 @@ class WritersSpec extends SparkSpec {
     t.vacuum(keep = 2)
     assert(t.vacuum(keep = 2) === ((Seq.empty[Int], 0L)))
     val extra = Seq((99L, 0, 999L)).toDF("id", "p", "m")
-    t.promote(t.stagePatch(extra, Seq("p")))
+    t.promote(t.stagePatch(extra))
     assert(t.read().filter(col("p") === 0).count() === 1)
     assert(t.chainDepth >= 2)
   }
